@@ -1,4 +1,4 @@
-"""End-to-end payroll load: CSV → normalized → star schema parquet.
+"""End-to-end payroll load: CSV → normalized → star schema, one transaction per load.
 
 Spark-first re-expression of the reference load (/root/reference/src/etl.py:14-77,
 /root/reference/scripts/load_once.py) — same dept → employee → fact ordering, same
@@ -8,37 +8,67 @@ layer) and no sequences (deterministic row_number surrogate keys, SURVEY.md §1.
 Physical design: fact_payroll is written partitioned by `month` — the Spark analog
 of the reference's fact_payroll(month) B-tree index (/root/reference/src/models.py:41-45):
 month-equality queries prune to a single partition directory instead of scanning.
+
+Storage: each table is a TxTable (sources/txtable.py) and one TxCatalog pointer
+pins a version of each, so every load publishes with a single catalog commit and
+every catalog version is one consistent warehouse state. There is one warehouse
+class; ``TxPayrollWarehouse`` is an alias for it.
 """
 
 from __future__ import annotations
-
-import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from payroll_etl_fastapi_spark.operators.upsert import insert_if_absent, upsert
 from payroll_etl_fastapi_spark.sources import csv_ingest
+from payroll_etl_fastapi_spark.sources.txtable import TxCatalog
 
 STAR_TABLES = ("dim_dept", "dim_employee", "fact_payroll")
 
 
 class PayrollWarehouse:
-    """A parquet star-schema warehouse rooted at `root`."""
+    """A star-schema warehouse rooted at `root`: one TxTable per table and a
+    TxCatalog pointer that pins one version of each.
+
+    A load writes dept → employee → fact as new table versions and publishes
+    all three with ONE ``TxCatalog.commit`` — the reference's single
+    load transaction, without Postgres. A reader sees the whole load
+    or none of it, and a load that dies before the commit leaves the last
+    committed state. A load holds the catalog's staging mark
+    (``TxCatalog.staging``) from its first read to its commit, so readers on
+    any handle know the head is about to move.
+
+    Within a load, ``read`` sees this load's own uncommitted table versions
+    (read-your-writes, as inside the reference's transaction); otherwise it
+    reads the catalog-pinned version. A reader that needs several tables from
+    one state takes ``catalog.head()`` once and snapshots each pinned version
+    (api.PayrollService does)."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
+        self.catalog = TxCatalog(spark, root)
+        self._pending: dict[str, int] = {}
 
-    def path(self, table: str) -> str:
-        return os.path.join(self.root, table)
+    def _visible_version(self, table: str) -> int | None:
+        """This load's transaction view: its OWN pending write if it made
+        one, else the catalog-pinned version — never bare table-latest,
+        which could belong to a previously ABORTED load (tables committed,
+        catalog swap never reached) and would silently resurrect that
+        load's data as the merge base."""
+        if table in self._pending:
+            return self._pending[table]
+        return self.catalog.current().get(table)
 
     def exists(self, table: str) -> bool:
-        return os.path.exists(self.path(table))
+        return self._visible_version(table) is not None
 
     def read(self, table: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(table))
+        v = self._visible_version(table)
+        if v is None:
+            raise FileNotFoundError(f"table {table!r} not committed in {self.root}")
+        return self.catalog.table(table).snapshot(version=v)
 
     def _write(
         self,
@@ -47,34 +77,18 @@ class PayrollWarehouse:
         partition_by: list[str] | None = None,
         sort_within: list[str] | None = None,
     ) -> None:
-        """Write-then-swap: the merge plans lazily read the current table, so we
-        never overwrite a path that is an input of the plan being executed.
+        """Write a new, uncommitted version of `table`.
 
         `sort_within` clusters rows inside each output file so parquet
         min/max row-group stats become selective on those columns — the
         engine's analog of the reference's secondary (emp_id, month) B-tree
         (/root/reference/src/models.py:46-50): a point predicate skips whole
         row groups instead of scanning the partition."""
-        target = self.path(table)
-        tmp = target + "__tmp"
         if sort_within:
             df = df.sortWithinPartitions(*sort_within)
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(tmp)
-        # crash-safe swap: rename the live table ASIDE first, so a crash at
-        # any point leaves a complete version at either `target` or
-        # `target__old` — never a window where the table simply vanished
-        # (rmtree-then-rename had exactly that window)
-        old = target + "__old"
-        if os.path.exists(old):
-            shutil.rmtree(old)  # leftover from a previously interrupted swap
-        if os.path.exists(target):
-            os.rename(target, old)
-        os.rename(tmp, target)
-        if os.path.exists(old):
-            shutil.rmtree(old)
+        self._pending[table] = self.catalog.table(table).overwrite(
+            df, partition_by=partition_by
+        )
 
     # -- load ---------------------------------------------------------------
 
@@ -84,11 +98,30 @@ class PayrollWarehouse:
         Returns row counts per table, mirroring the reference's print-based
         verification (/root/reference/scripts/load_once.py:73-74).
         """
-        raw = csv_ingest.read_payroll_csv(self.spark, csv_path)
-        normalized = csv_ingest.normalize(raw)
-        return self.load_frames(normalized)
+        with self.catalog.staging():
+            raw = csv_ingest.read_payroll_csv(self.spark, csv_path)
+            return self._transaction(csv_ingest.normalize(raw))
 
     def load_frames(self, normalized: DataFrame) -> dict[str, int]:
+        """Load one normalized batch in one transaction; returns row counts
+        per table as of the new committed state."""
+        with self.catalog.staging():
+            return self._transaction(normalized)
+
+    def _transaction(self, normalized: DataFrame) -> dict[str, int]:
+        """Stage the three tables and publish them; the caller holds the
+        catalog's staging mark, so readers know the head is about to move."""
+        try:
+            counts = self._load_tables(normalized)
+            # the single COMMIT: all three tables become visible atomically
+            self.catalog.commit({**self.catalog.current(), **self._pending})
+        finally:
+            # a failed load must not leak its pending versions into the next
+            # load's read view
+            self._pending = {}
+        return counts
+
+    def _load_tables(self, normalized: DataFrame) -> dict[str, int]:
         # 1) dim_dept — sorted-name surrogate keys; incremental loads append new
         #    depts after max existing id (SERIAL append behavior, SURVEY §7.3).
         depts = csv_ingest.dept_rows(normalized)
@@ -165,68 +198,5 @@ class PayrollWarehouse:
         return counts
 
 
-class TxPayrollWarehouse(PayrollWarehouse):
-    """The same load with the reference's TRANSACTION semantics: the
-    reference wraps dept → employee → fact in one Postgres transaction
-    (/root/reference/src/etl.py:15), so a crash mid-load leaves the old
-    state fully intact. The base PayrollWarehouse only has per-table
-    crash-safe swaps; this variant stores each table in a TxTable and
-    publishes all three new versions with ONE TxCatalog pointer swap —
-    external readers (``read_committed``) see the whole load or none of it.
-
-    Within a load, ``read`` sees this load's own uncommitted table versions
-    (read-your-writes, as inside the reference's transaction); everything
-    else reads through the catalog pin."""
-
-    def __init__(self, spark: SparkSession, root: str):
-        super().__init__(spark, root)
-        from payroll_etl_fastapi_spark.sources.txtable import TxCatalog
-
-        self.catalog = TxCatalog(spark, root)
-        self._pending: dict[str, int] = {}
-
-    def _visible_version(self, table: str) -> int | None:
-        """This load's transaction view: its OWN pending write if it made
-        one, else the catalog-pinned version — never bare table-latest,
-        which could belong to a previously ABORTED load (tables committed,
-        catalog swap never reached) and would silently resurrect that
-        load's data as the merge base."""
-        if table in self._pending:
-            return self._pending[table]
-        return self.catalog.current().get(table)
-
-    def exists(self, table: str) -> bool:
-        return self._visible_version(table) is not None
-
-    def read(self, table: str) -> DataFrame:
-        v = self._visible_version(table)
-        if v is None:
-            raise FileNotFoundError(f"table {table!r} not committed in {self.root}")
-        return self.catalog.table(table).snapshot(version=v)
-
-    def read_committed(self, table: str) -> DataFrame:
-        """What an external reader sees: the catalog-pinned version."""
-        return self.catalog.read(table)
-
-    def _write(
-        self,
-        df: DataFrame,
-        table: str,
-        partition_by: list[str] | None = None,
-        sort_within: list[str] | None = None,
-    ) -> None:
-        if sort_within:
-            df = df.sortWithinPartitions(*sort_within)
-        self._pending[table] = self.catalog.table(table).overwrite(
-            df, partition_by=partition_by
-        )
-
-    def load_frames(self, normalized: DataFrame) -> dict[str, int]:
-        # a failed earlier load must not leak its pending versions into this
-        # transaction's read view
-        self._pending = {}
-        counts = super().load_frames(normalized)
-        # the single COMMIT: all three tables become visible atomically
-        self.catalog.commit({**self.catalog.current(), **self._pending})
-        self._pending = {}
-        return counts
+# the former transactional subclass's name; perfbench/ still imports it
+TxPayrollWarehouse = PayrollWarehouse

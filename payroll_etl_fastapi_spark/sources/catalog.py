@@ -8,10 +8,10 @@ that drive pruning: partition columns and per-file row-group statistics."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from payroll_etl_fastapi_spark.sources.txtable import TxCatalog
 
 
 def list_tables(spark: SparkSession) -> list[str]:
@@ -43,13 +43,12 @@ def physical_layout(df: DataFrame) -> DataFrame:
 
 
 def partition_values(warehouse_root: str, table: str, column: str) -> list[str]:
-    """Hive-style partition directory values for a warehouse table — what
-    month-equality predicates prune against (the fact's month partitioning is
-    the analog of the reference's fact_payroll(month) B-tree)."""
-    path = os.path.join(warehouse_root, table)
-    prefix = f"{column}="
-    if not os.path.isdir(path):
+    """Hive-style partition values of a warehouse table's COMMITTED snapshot
+    (the version the warehouse catalog pins) — what month-equality predicates
+    prune against (the fact's month partitioning is the analog of the
+    reference's fact_payroll(month) B-tree). [] before the table is committed."""
+    cat = TxCatalog(None, warehouse_root)
+    pinned = cat.current().get(table)
+    if pinned is None:
         return []
-    return sorted(
-        d[len(prefix):] for d in os.listdir(path) if d.startswith(prefix)
-    )
+    return cat.table(table).partition_values(column, pinned)

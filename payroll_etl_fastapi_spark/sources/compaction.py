@@ -15,9 +15,10 @@ Design:
   at scale) and is O(files), driver-side, no Spark job.
 - ``compact_table`` rewrites only the directories the plan says benefit
   (observed files > target): read → ``coalesce(n_target)`` → write-then-swap
-  (the same crash-safe swap as etl._write). coalesce, not repartition: a
-  compaction must MERGE partitions without a shuffle — the data was already
-  correctly placed, we only change its file granularity.
+  (a crash-safe rename-aside swap, see ``_swap_paths`` and ``_recover``).
+  coalesce, not repartition: a compaction must MERGE partitions without a
+  shuffle — the data was already correctly placed, we only change its file
+  granularity.
 - Partitioned tables compact per partition directory, preserving the
   partition column layout (each directory is rewritten independently, so a
   crash mid-compaction leaves every partition complete, old or new).

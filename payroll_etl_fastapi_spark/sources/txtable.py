@@ -52,12 +52,13 @@ version, then one catalog-pointer swap makes all of them visible atomically.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import re
 import shutil
 import uuid
-from collections.abc import Sequence
+from collections.abc import Iterator, Sequence
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -73,6 +74,7 @@ __all__ = [
 ]
 
 _MANIFEST_RE = re.compile(r"^v(\d+)\.json$")
+_STAGING = "staging"  # TxCatalog's mark of a transaction in flight
 
 
 class ConcurrentCommit(RuntimeError):
@@ -303,6 +305,18 @@ class TxTable:
         # still gets PartitionFilters pruning, and manifests stay short
         # (optimize() folds history into one dir).
         return self._read_dirs(snap, snap.data_dirs)
+
+    def partition_values(self, column: str, version: int | None = None) -> list[str]:
+        """Sorted hive partition values of the leading partition column
+        ``column`` at ``version`` (default: latest), from the data dirs
+        that version's manifest lists — no Spark job."""
+        v = self.latest_version() if version is None else version
+        prefix = f"{column}="
+        found: set[str] = set()
+        for d in self._read_manifest(v).data_dirs:
+            names = os.listdir(os.path.join(self.root, d))
+            found.update(n[len(prefix):] for n in names if n.startswith(prefix))
+        return sorted(found)
 
     # -- schema evolution --------------------------------------------------
 
@@ -1562,13 +1576,41 @@ class TxCatalog:
                 out.append(int(m.group(1)))
         return sorted(out)
 
-    def current(self) -> dict[str, int]:
-        """table name → pinned table version ({} before the first commit)."""
+    def head(self) -> tuple[int, dict[str, int]]:
+        """(catalog version, table name → pinned table version), both from
+        one published pointer; (0, {}) before the first commit. A published
+        pointer never changes, so the pair names one warehouse state."""
         vs = self._versions()
         if not vs:
-            return {}
+            return 0, {}
         with open(os.path.join(self._cat, f"v{vs[-1]}.json")) as fh:
-            return json.load(fh)["tables"]
+            return vs[-1], json.load(fh)["tables"]
+
+    def current(self) -> dict[str, int]:
+        """table name → pinned table version ({} before the first commit)."""
+        return self.head()[1]
+
+    @contextlib.contextmanager
+    def staging(self) -> Iterator[None]:
+        """Mark, for every handle on this root, that a transaction is staging
+        table versions the head does not pin yet; the mark is cleared when
+        the block ends, committed or not. There is one mark per root: when
+        writers overlap, the first to finish clears it. A writer that dies
+        inside the block leaves it until the next transaction on the root
+        ends."""
+        os.makedirs(self._cat, exist_ok=True)
+        mark = os.path.join(self._cat, _STAGING)
+        open(mark, "w").close()
+        try:
+            yield
+        finally:
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(mark)
+
+    def is_staging(self) -> bool:
+        """True while some writer is inside ``staging()`` on this root: the
+        head is about to move."""
+        return os.path.exists(os.path.join(self._cat, _STAGING))
 
     def commit(self, table_versions: dict[str, int], epoch_key: str | None = None) -> int:
         """Atomically publish a new catalog state (full map, not a delta).

@@ -3,10 +3,17 @@ BASELINE.md plus the 404 and shape semantics of /root/reference/src/api.py."""
 
 from __future__ import annotations
 
+import sys
+import threading
+
 import pytest
 
-from payroll_etl_fastapi_spark.api import NotFound, PayrollService
+from payroll_etl_fastapi_spark import api
+from payroll_etl_fastapi_spark.api import InvalidParam, NotFound, PayrollService
 from payroll_etl_fastapi_spark.etl import PayrollWarehouse
+from payroll_etl_fastapi_spark.plans import kpi
+from payroll_etl_fastapi_spark.sources import csv_ingest
+from payroll_etl_fastapi_spark.sources.txtable import TxTable
 
 
 @pytest.fixture(scope="module")
@@ -168,7 +175,227 @@ def test_stdlib_http_server_round_trip(service):
         with pytest.raises(urllib.error.HTTPError) as e:
             get("/nope")
         assert e.value.code == 404
+        # out-of-domain values are refused before they reach the engine
+        for bad in (
+            "/kpi/summary?month=2025-13",
+            "/kpi/anomalies?month=2025-05&limit=0",
+            "/kpi/anomalies?month=2025-05&threshold=nan",
+        ):
+            with pytest.raises(urllib.error.HTTPError) as e:
+                get(bad)
+            assert e.value.code == 422, bad
     finally:
         srv.shutdown()
         srv.server_close()
         t.join(timeout=5)
+
+
+# -- on small generated batches: one committed version per request, the
+# per-version answer memo, and the HTTP edge's 422 / 500 answers -------------
+
+
+def _batch(spark, rows):
+    """rows: (emp_id, dept, month, gross) -> a normalized load batch."""
+    df = spark.createDataFrame(
+        [
+            (e, d, m, str(g), "0", "0", "0", "0", str(g), "1", "160", "USD", "G1", "HQ")
+            for e, d, m, g in rows
+        ],
+        "emp_id string, dept string, month string, gross string, bonus string, "
+        "overtime string, taxes string, deductions string, net string, fte string, "
+        "hours_worked string, currency string, job_grade string, location string",
+    )
+    return csv_ingest.normalize(df)
+
+
+# three committed states; each later batch moves an employee to another dept,
+# which restates every month's by-dept answer (dimensions are type 1)
+BATCH_0 = [("E1", "Alpha", "2025-01", 100), ("E2", "Beta", "2025-01", 200), ("E3", "Beta", "2025-01", 300)]
+BATCH_1 = [("E2", "Alpha", "2025-02", 210)]  # E2 Beta -> Alpha
+BATCH_2 = [("E3", "Gamma", "2025-03", 310)]  # E3 Beta -> Gamma, a new dept
+# by-dept gross of 2025-01 at each committed state
+JAN_BY_DEPT = [
+    {"Alpha": 100.0, "Beta": 500.0},
+    {"Alpha": 300.0, "Beta": 300.0},
+    {"Alpha": 300.0, "Gamma": 300.0},
+]
+
+
+def _gross(rows) -> dict[str, float]:
+    return {r["dept"]: r["gross"] for r in rows}
+
+
+@pytest.fixture()
+def small_wh(spark, tmp_path):
+    wh = PayrollWarehouse(spark, str(tmp_path / "wh"))
+    wh.load_frames(_batch(spark, BATCH_0))
+    return wh
+
+
+def test_request_reads_one_committed_version(spark, small_wh, monkeypatch):
+    """A load that commits between a request's first and last table reads
+    must not tear its answer: the request answers from the version it
+    started on. The loader is the serving handle itself."""
+    svc = PayrollService(small_wh)
+    original = TxTable.snapshot
+    fired = []
+
+    def snapshot_then_commit(self, version=None):
+        df = original(self, version)
+        if not fired:  # once, after the request's first table read
+            fired.append(self.root)
+            small_wh.load_frames(_batch(spark, BATCH_1))
+        return df
+
+    monkeypatch.setattr(TxTable, "snapshot", snapshot_then_commit)
+    assert _gross(svc.by_dept("2025-01")) == JAN_BY_DEPT[0]
+    monkeypatch.undo()
+    assert fired and small_wh.catalog.head()[0] == 2  # the load committed mid-request
+    assert _gross(svc.by_dept("2025-01")) == JAN_BY_DEPT[1]
+
+
+def test_memo_is_fresh_after_commit(spark, small_wh):
+    """Memoized answers and 404s belong to the version they were computed
+    at: the next request after a commit sees the new state."""
+    svc = PayrollService(small_wh)
+    assert _gross(svc.by_dept("2025-01")) == JAN_BY_DEPT[0]
+    for _ in range(2):  # computed, then served from the memo
+        with pytest.raises(NotFound):
+            svc.summary("2025-02")
+    small_wh.load_frames(_batch(spark, BATCH_1))
+    assert _gross(svc.by_dept("2025-01")) == JAN_BY_DEPT[1]
+    assert svc.summary("2025-02")["gross"] == 210.0
+
+
+def test_memo_is_bypassed_while_a_load_is_staging(spark, small_wh, monkeypatch):
+    """Between a load's first write and its commit, requests answer at the
+    head but neither read nor fill the memo; once the load ends, with or
+    without a commit, repeats are memoized again."""
+    svc = PayrollService(small_wh)
+    plans = []
+    plan = kpi.kpi_summary
+    monkeypatch.setattr(kpi, "kpi_summary", lambda *a: plans.append(a[1]) or plan(*a))
+    assert svc.summary("2025-01")["gross"] == 600.0  # memoized at version 1
+    inside = []
+    write = TxTable.overwrite
+
+    def ask_then_write(self, df, partition_by=None):
+        if not inside:  # at the load's first table write
+            inside.append(small_wh.catalog.is_staging())
+            inside.extend(svc.summary("2025-01")["gross"] for _ in range(2))
+        return write(self, df, partition_by=partition_by)
+
+    monkeypatch.setattr(TxTable, "overwrite", ask_then_write)
+    small_wh.load_frames(_batch(spark, BATCH_1))
+    assert inside == [True, 600.0, 600.0]
+    assert plans == ["2025-01"] * 3 and len(svc._memo) == 1
+    assert not small_wh.catalog.is_staging()
+    for _ in range(2):  # the new version: computed, then memoized
+        assert svc.summary("2025-01")["gross"] == 600.0
+    assert len(plans) == 4
+
+    def failed_commit(_versions):
+        raise RuntimeError("commit failed")
+
+    monkeypatch.setattr(small_wh.catalog, "commit", failed_commit)
+    with pytest.raises(RuntimeError, match="commit failed"):
+        small_wh.load_frames(_batch(spark, BATCH_2))
+    assert not small_wh.catalog.is_staging()
+
+
+def test_memo_serves_repeats_without_spark_and_stays_bounded(small_wh, monkeypatch):
+    svc = PayrollService(small_wh)
+    first = svc.summary("2025-01")
+    first["gross"] = -1.0  # a caller's edit does not reach the memo
+
+    def no_plan(*_a, **_kw):
+        raise AssertionError("a repeated request re-planned")
+
+    monkeypatch.setattr(kpi, "kpi_summary", no_plan)
+    assert svc.summary("2025-01")["gross"] == 600.0
+    monkeypatch.undo()
+    monkeypatch.setattr(api, "MEMO_SIZE", 2)
+    for m in ("2025-02", "2025-03", "2025-04"):
+        with pytest.raises(NotFound):
+            svc.summary(m)
+    assert len(svc._memo) == 2
+    with pytest.raises(InvalidParam):
+        svc.anomalies("2025-01", limit=api.LIMIT_MAX + 1)
+
+
+def test_concurrent_reads_while_loads_commit(spark, small_wh):
+    """Readers racing two commits: no request raises, and every answer is
+    the answer of one committed state."""
+    svc = PayrollService(small_wh)
+    stop = threading.Event()
+    seen: list[dict] = []
+    errors: list[BaseException] = []
+
+    def reader() -> None:
+        while not stop.is_set():
+            try:
+                seen.append(_gross(svc.by_dept("2025-01")))
+            except BaseException as e:  # recorded; the test asserts there are none
+                errors.append(e)
+                return
+
+    old_interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-4)
+    threads = [threading.Thread(target=reader) for _ in range(6)]
+    try:
+        for t in threads:
+            t.start()
+        small_wh.load_frames(_batch(spark, BATCH_1))
+        small_wh.load_frames(_batch(spark, BATCH_2))
+    finally:
+        stop.set()
+        for t in threads:
+            t.join(timeout=60)
+        sys.setswitchinterval(old_interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert seen and all(answer in JAN_BY_DEPT for answer in seen)
+    assert _gross(svc.by_dept("2025-01")) == JAN_BY_DEPT[2]
+
+
+def test_http_edge_answers_bad_input_and_faults(small_wh, monkeypatch):
+    """Out-of-domain params get a 422 and an engine fault a 500, each with a
+    JSON detail — never a dropped connection."""
+    import json
+    import urllib.error
+    import urllib.request
+
+    srv = api.serve_http(PayrollService(small_wh))
+    t = threading.Thread(target=srv.serve_forever, daemon=True)
+    t.start()
+
+    def status(path):
+        try:
+            with urllib.request.urlopen(f"http://127.0.0.1:{srv.server_address[1]}{path}") as r:
+                return r.status, json.loads(r.read())
+        except urllib.error.HTTPError as e:
+            return e.code, json.loads(e.read())
+
+    def broken(*_a, **_kw):
+        raise RuntimeError("engine fault")
+
+    try:
+        for bad in (
+            "/kpi/summary?month=2025-13",
+            "/kpi/by-dept?month=25-01",
+            "/kpi/delta?m1=2025-01&m2=0000-01",
+            "/kpi/anomalies?month=2025-01&limit=0",
+            f"/kpi/anomalies?month=2025-01&limit={api.LIMIT_MAX + 1}",
+            "/kpi/anomalies?month=2025-01&threshold=nan",
+            "/kpi/anomalies?month=2025-01&threshold=inf",
+        ):
+            code, body = status(bad)
+            assert code == 422 and "detail" in body, bad
+        assert status("/kpi/summary?month=2025-01")[0] == 200
+        monkeypatch.setattr(kpi, "kpi_by_dept", broken)
+        assert status("/kpi/by-dept?month=2025-01") == (500, {"detail": "Internal Server Error"})
+    finally:
+        srv.shutdown()
+        srv.server_close()
+        t.join(timeout=5)
+    assert not t.is_alive()

@@ -1,22 +1,22 @@
-"""TxPayrollWarehouse: the reference's one-transaction load semantics on the
+"""PayrollWarehouse: the reference's one-transaction load semantics on the
 manifest-log storage layer — golden parity plus all-or-nothing visibility."""
 
 from __future__ import annotations
 
 import pytest
 
-from payroll_etl_fastapi_spark.etl import TxPayrollWarehouse
+from payroll_etl_fastapi_spark.etl import PayrollWarehouse
 from payroll_etl_fastapi_spark.plans import kpi
 
 REF_CSV = "/root/reference/data/payroll.csv"
 
 
 def test_tx_load_matches_golden_anchors(spark, tmp_path):
-    wh = TxPayrollWarehouse(spark, str(tmp_path / "wh"))
+    wh = PayrollWarehouse(spark, str(tmp_path / "wh"))
     counts = wh.load_csv(REF_CSV)
     assert counts == {"dim_dept": 6, "dim_employee": 500, "fact_payroll": 5526}
     # external (catalog-pinned) view serves the golden KPI
-    row = kpi.kpi_summary(wh.read_committed("fact_payroll"), "2025-05").first()
+    row = kpi.kpi_summary(wh.read("fact_payroll"), "2025-05").first()
     assert round(row.fot, 2) == 696994.07
     assert row.headcount == 440
     # idempotent reload through the tx path
@@ -25,9 +25,9 @@ def test_tx_load_matches_golden_anchors(spark, tmp_path):
 
 
 def test_crash_before_catalog_commit_leaves_old_state(spark, tmp_path, monkeypatch):
-    wh = TxPayrollWarehouse(spark, str(tmp_path / "wh"))
+    wh = PayrollWarehouse(spark, str(tmp_path / "wh"))
     wh.load_csv(REF_CSV)
-    before = wh.read_committed("fact_payroll").count()
+    before = wh.read("fact_payroll").count()
 
     # second load crashes after all three table writes, before the catalog
     # pointer swap — the reference's transaction-abort window
@@ -42,7 +42,7 @@ def test_crash_before_catalog_commit_leaves_old_state(spark, tmp_path, monkeypat
     monkeypatch.undo()
 
     # external readers still see the first load, in full
-    assert wh.read_committed("fact_payroll").count() == before
+    assert wh.read("fact_payroll").count() == before
     assert wh.catalog.current()["fact_payroll"] == 1
     # the aborted load's table versions exist but are unpublished
     assert wh.catalog.table("fact_payroll").latest_version() == 2
@@ -50,7 +50,7 @@ def test_crash_before_catalog_commit_leaves_old_state(spark, tmp_path, monkeypat
     # a subsequent successful load repairs everything atomically
     wh._pending = {}
     wh.load_csv(REF_CSV)
-    assert wh.read_committed("fact_payroll").count() == before
+    assert wh.read("fact_payroll").count() == before
     assert wh.catalog.current()["fact_payroll"] >= 3
 
 
@@ -59,16 +59,16 @@ def test_reads_never_see_an_aborted_loads_table_versions(spark, tmp_path):
     the NEXT load's read view must be the catalog-pinned state, not bare
     table-latest — otherwise the aborted transaction's data silently becomes
     the merge base and gets durably committed (code-review finding r3)."""
-    wh = TxPayrollWarehouse(spark, str(tmp_path / "wh"))
+    wh = PayrollWarehouse(spark, str(tmp_path / "wh"))
     wh.load_csv(REF_CSV)
     pinned = wh.catalog.current()["fact_payroll"]
     # poison: a table version beyond the pin, with no catalog commit (an
     # aborted load's leftover)
     poisoned = wh.catalog.table("fact_payroll")
     poisoned.overwrite(
-        wh.read_committed("fact_payroll").limit(1)
+        wh.read("fact_payroll").limit(1)
     )
     assert poisoned.latest_version() > pinned
     # the warehouse view must ignore it
-    assert wh.read("fact_payroll").count() == wh.read_committed("fact_payroll").count()
+    assert wh.read("fact_payroll").count() == wh.catalog.read("fact_payroll").count()
     assert wh.read("fact_payroll").count() == 5526
