@@ -2,31 +2,32 @@
 
 Mirrors /root/reference/src/api.py routes, parameters, status codes and
 response shapes: /health, /kpi/summary, /kpi/by-dept, /kpi/delta,
-/kpi/anomalies (the second, working definition — SURVEY.md §2.8.1). The
-engine work is all in plans/kpi.py; this layer only collects (KPI results are
-intrinsically small — ≤ #depts or ≤ limit rows) and serializes.
+/kpi/anomalies (the second, working definition — SURVEY.md §2.8.1).
 
-One version per request: a request reads the warehouse catalog's head
-(``TxCatalog.head``) once and answers from that committed state alone, so a
-load committing mid-request cannot tear its answer. It never reads through a
-loader's uncommitted view, even when the service and the loader share one
-``PayrollWarehouse`` handle. The three tables of the newest version are
-resolved lazily, once per version, and shared by its requests (``summary``
-never touches the dimensions).
+One derivation per version: every answer is a pure function of one committed
+warehouse state. A request reads the catalog's head (``TxCatalog.head``) once.
+The first request to touch a version runs one Spark plan for it,
+``kpi.kpi_rows`` (the fact left-joined to both dimensions, broadcast), and
+collects it once through Arrow; ``_Answers`` then indexes those rows:
 
-Per-version memo: each endpoint's answer — or its 404 — is kept in a bounded
-LRU keyed by (catalog version, endpoint, validated params). A commit makes a
-new version and so new keys: a memoized answer is exactly as fresh as a
-recomputed one, and a repeated request costs no Spark job. Parameters are
-validated before the lookup (``InvalidParam``, HTTP 422), which also bounds
-the key space. While a load is in flight (the catalog's staging mark,
-``TxCatalog.is_staging``) requests bypass the memo: they answer at the head
-as before but neither read nor fill it. A memo built for a head that is
-about to be replaced serves only until the commit, and under back-to-back
-loads its near-free hits come in bursts sized by when each commit lands, so
-read throughput during a month close would swing with commit timing.
-Between loads, and when serving a warehouse nobody writes, repeats are
-answered from the memo.
+- per-month sums of the fact alone (``summary``, the company delta);
+- per-(month, dept) sums over the rows with a dept (``by_dept``, the dept
+  delta);
+- per-(month, dept) median net, MAD and robust z, the rows ranked as the
+  anomalies query ranks them (|z| desc, emp_id), one list per month and one
+  per (month, dept), each cut at ``LIMIT_MAX``. The dept filter commutes
+  with the per-dept median and MAD, and threshold and limit apply after the
+  ranking, so any request is a slice of one list.
+
+Every later request on that version is dict lookups plus a slice of at most
+``limit`` rows: no Spark job. Concurrent first touches share one derivation;
+a failed derivation is not kept, so the next request runs it again. Only the
+newest version's answers are kept, and nothing else is cached: a commit makes
+a new version, which the next request derives. A load committing mid-request
+cannot tear an answer, and no request reads through a loader's uncommitted
+view, even when the service and the loader share one ``PayrollWarehouse``
+handle. The plans in plans/kpi.py stay the definition of each answer (the
+tests check the service against them at every committed state).
 
 `PayrollService` is framework-free so the engine can be driven from tests or
 notebooks; `create_app()` wires it into FastAPI when that package is
@@ -36,15 +37,15 @@ shell either way).
 
 from __future__ import annotations
 
-import copy
 import logging
 import math
 import re
 import threading
-from collections import OrderedDict
-from typing import Any, Callable
+from concurrent.futures import Future
+from typing import Any
 
-from pyspark.sql import DataFrame, Row
+import pandas as pd
+from pyspark.sql import DataFrame
 
 from payroll_etl_fastapi_spark.etl import PayrollWarehouse
 from payroll_etl_fastapi_spark.plans import kpi
@@ -52,10 +53,12 @@ from payroll_etl_fastapi_spark.sources.txtable import TxCatalog
 
 log = logging.getLogger(__name__)
 
-MEMO_SIZE = 512  # answers kept, over all versions; one version's working set is a few hundred keys
 LIMIT_MAX = 500  # largest `limit` /kpi/anomalies accepts
 
 _MONTH = re.compile(r"(?!0000)[0-9]{4}-(0[1-9]|1[0-2])")
+_SUMS = ("fot", "gross", "bonus", "overtime", "taxes", "net", "fte")  # by_dept's key order
+_DELTAS = ("gross", "bonus", "overtime", "fot")
+_SCORES = ("emp_id", "dept", "net", "median_net", "mad", "z")
 
 
 class NotFound(Exception):
@@ -86,36 +89,101 @@ def _threshold(value: Any) -> float:
     return float(value)
 
 
-def _floats(d: dict[str, Any]) -> dict[str, Any]:
-    """Decimal→float edge coercion analog (/root/reference/src/api.py:256-257);
-    DoubleType makes this a near-no-op but keeps the JSON shape identical."""
-    return {
-        k: (float(v) if isinstance(v, (int, float)) and not isinstance(v, bool) and k not in ("headcount",) else v)
-        for k, v in d.items()
-    }
+def _ratio(a: float | None, b: float | None) -> float | None:
+    """a / b, null on a null operand or a zero denominator (the plans'
+    `when(b != 0, a / b)`)."""
+    return a / b if a is not None and b else None
+
+
+def _records(frame: pd.DataFrame, columns: tuple[str, ...]) -> list[tuple]:
+    """The rows of ``frame[columns]`` as tuples of Python values, NaN (a
+    null collected through Arrow) as None."""
+    cols = [frame[c].astype(object).where(frame[c].notna(), None).tolist() for c in columns]
+    return list(zip(*cols))
+
+
+def _sums(rows: pd.DataFrame, by: list[str]) -> dict[Any, dict[str, Any]]:
+    """group -> {measure sums, headcount}. A sum over only nulls is None, as
+    SQL SUM; headcount is COUNT(DISTINCT emp_id), since a base CSV can
+    repeat an (emp_id, month)."""
+    g = rows.groupby(by, sort=False)
+    out = g[list(_SUMS)].sum(min_count=1)
+    out["headcount"] = g["emp_id"].nunique()
+    fields = tuple(out.columns)
+    return {key: dict(zip(fields, row)) for key, row in zip(out.index, _records(out, fields))}
+
+
+def _ranked(scored: pd.DataFrame, by: list[str]) -> dict[tuple, list[tuple]]:
+    """group -> its scored rows in the anomalies query's order (|z| desc,
+    emp_id), cut at ``LIMIT_MAX`` rows."""
+    top = (
+        scored.sort_values([*by, "rank", "emp_id"], ascending=[*(True for _ in by), False, True])
+        .groupby(by, sort=False)
+        .head(LIMIT_MAX)
+    )
+    ranked: dict[tuple, list[tuple]] = {}
+    for key, row in zip(zip(*(top[c].tolist() for c in by)), _records(top, _SCORES)):
+        ranked.setdefault(key, []).append(row)
+    return ranked
+
+
+class _Answers:
+    """Every answer one committed warehouse state can give, indexed from
+    its ``kpi.kpi_rows`` (collected once)."""
+
+    def __init__(self, rows: pd.DataFrame):
+        rows = rows.assign(fot=rows["gross"] + rows["bonus"] + rows["overtime"])
+        self.months = _sums(rows, ["month"])
+        joined = rows[rows["dept"].notna()]
+        self.depts: dict[str, dict[str, dict[str, Any]]] = {}
+        for (month, dept), sums in _sums(joined, ["month", "dept"]).items():
+            self.depts.setdefault(month, {})[dept] = sums
+
+        cell = [joined["month"], joined["dept"]]
+        median = joined.groupby(cell)["net"].transform("median")
+        mad = (joined["net"] - median).abs().groupby(cell).transform("median")
+        z = 0.6745 * (joined["net"] - median) / mad.where(mad != 0.0)
+        scored = joined[["month", "emp_id", "dept", "net"]].assign(
+            median_net=median, mad=mad, z=z, rank=z.fillna(0.0).abs()
+        )
+        # (month, None): every dept's rows; (month, dept): one dept's
+        self.ranked = {(m, None): r for (m,), r in _ranked(scored, ["month"]).items()}
+        self.ranked.update(_ranked(scored, ["month", "dept"]))
 
 
 class _Version:
-    """One committed catalog version: its number and its tables, each
-    resolved to a DataFrame on first use and then shared."""
+    """One committed catalog version and, once derived, its answers."""
 
     def __init__(self, catalog: TxCatalog, number: int, pinned: dict[str, int]):
         self.number = number
         self._catalog = catalog
         self._pinned = pinned
-        self._frames: dict[str, DataFrame] = {}
         self._lock = threading.Lock()
+        self._derivation: Future | None = None
 
-    def table(self, name: str) -> DataFrame:
+    def _table(self, name: str) -> DataFrame:
+        if name not in self._pinned:
+            raise FileNotFoundError(f"table {name!r} not committed in {self._catalog.root}")
+        return self._catalog.table(name).snapshot(self._pinned[name])
+
+    def answers(self) -> _Answers:
+        """The version's answers, derived by the first request that asks.
+        Requests that ask meanwhile wait for that derivation and share its
+        result or its error; a failed derivation is dropped, so the next
+        request runs it again."""
         with self._lock:
-            if name not in self._frames:
-                if name not in self._pinned:
-                    raise FileNotFoundError(f"table {name!r} not committed in {self._catalog.root}")
-                self._frames[name] = self._catalog.table(name).snapshot(self._pinned[name])
-            return self._frames[name]
-
-    def star(self) -> tuple[DataFrame, DataFrame, DataFrame]:
-        return self.table("fact_payroll"), self.table("dim_employee"), self.table("dim_dept")
+            derivation, owner = self._derivation, self._derivation is None
+            if owner:
+                derivation = self._derivation = Future()
+        if owner:
+            try:
+                fact, emp, dept = (self._table(t) for t in ("fact_payroll", "dim_employee", "dim_dept"))
+                derivation.set_result(_Answers(kpi.kpi_rows(fact, emp, dept).toPandas()))
+            except BaseException as e:
+                with self._lock:
+                    self._derivation = None
+                derivation.set_exception(e)
+        return derivation.result()
 
 
 class PayrollService:
@@ -123,45 +191,20 @@ class PayrollService:
 
     def __init__(self, warehouse: PayrollWarehouse):
         self.wh = warehouse
-        self._lock = threading.Lock()  # guards _version and _memo
+        self._lock = threading.Lock()  # guards _version
         self._version: _Version | None = None
-        # (catalog version, endpoint, *params) -> (answer, None) or (None, 404 detail)
-        self._memo: OrderedDict[tuple, tuple[Any, str | None]] = OrderedDict()
 
-    def _head(self) -> _Version:
-        """The newest committed version, read once for the request."""
+    def _answers(self) -> _Answers:
+        """The answers of the newest committed version, its head read once
+        for the request. A request whose head is older than the slot's
+        version is answered from the slot: that version was committed while
+        the request ran."""
         number, pinned = self.wh.catalog.head()
         with self._lock:
-            if self._version is None or self._version.number != number:
+            if self._version is None or number > self._version.number:
                 self._version = _Version(self.wh.catalog, number, pinned)
-            return self._version
-
-    def _answer(self, key: tuple, compute: Callable[[_Version], Any]) -> Any:
-        """``compute``'s answer at the request's version, memoized per
-        version unless a load is staging. A 404 is memoized like an answer.
-        Each caller gets its own copy, so a caller that mutates it cannot
-        corrupt the memo."""
-        version = self._head()
-        if self.wh.catalog.is_staging():
-            return compute(version)
-        mkey = (version.number, *key)
-        with self._lock:
-            hit = self._memo.get(mkey)
-            if hit is not None:
-                self._memo.move_to_end(mkey)
-        if hit is None:
-            try:
-                hit = (compute(version), None)
-            except NotFound as e:
-                hit = (None, str(e))
-            with self._lock:
-                self._memo[mkey] = hit
-                while len(self._memo) > MEMO_SIZE:
-                    self._memo.popitem(last=False)
-        answer, missing = hit
-        if missing is not None:
-            raise NotFound(missing)
-        return copy.deepcopy(answer)
+            version = self._version
+        return version.answers()
 
     def health(self) -> dict[str, str]:
         return {"status": "ok"}
@@ -170,38 +213,35 @@ class PayrollService:
         """404 keys on SUM(gross) IS NULL, not on row absence — an all-null
         month with rows still 404s (/root/reference/src/api.py:39-40)."""
         month = _month("month", month)
-
-        def compute(ver: _Version) -> dict[str, Any]:
-            row: Row = kpi.kpi_summary(ver.table("fact_payroll"), month).first()
-            if row is None or row["gross"] is None:
-                raise NotFound("No data for month")
-            return _floats(row.asDict())
-
-        return self._answer(("summary", month), compute)
+        s = self._answers().months.get(month)
+        if s is None or s["gross"] is None:
+            raise NotFound("No data for month")
+        return {
+            "month": month,
+            **{c: s[c] for c in ("fot", "taxes", "gross", "net", "fte", "headcount")},
+            "tax_share": _ratio(s["taxes"], s["gross"]),
+            "avg_net_per_fte": _ratio(s["net"], s["fte"]),
+        }
 
     def by_dept(self, month: str) -> list[dict[str, Any]]:
         month = _month("month", month)
-
-        def compute(ver: _Version) -> list[dict[str, Any]]:
-            rows = kpi.kpi_by_dept(*ver.star(), month).collect()
-            if not rows:
-                raise NotFound("No data for month")
-            return [_floats(r.asDict()) for r in rows]
-
-        return self._answer(("by_dept", month), compute)
+        depts = self._answers().depts.get(month)
+        if not depts:
+            raise NotFound("No data for month")
+        return [{"dept": d, **depts[d]} for d in sorted(depts)]
 
     def delta(self, m1: str, m2: str) -> dict[str, Any]:
         m1, m2 = _month("m1", m1), _month("m2", m2)
+        answers = self._answers()
 
-        def compute(ver: _Version) -> dict[str, Any]:
-            company_df, by_dept_df = kpi.kpi_delta(*ver.star(), m1, m2)
-            comp = company_df.first().asDict()
-            return {
-                "company": {k: float(v or 0) for k, v in comp.items()},
-                "by_dept": [_floats(r.asDict()) for r in by_dept_df.collect()],
-            }
+        def diff(a: dict, b: dict) -> dict[str, float]:
+            return {f"{c}_delta": (b.get(c) or 0.0) - (a.get(c) or 0.0) for c in _DELTAS}
 
-        return self._answer(("delta", m1, m2), compute)
+        a, b = answers.depts.get(m1, {}), answers.depts.get(m2, {})
+        return {
+            "company": diff(answers.months.get(m1, {}), answers.months.get(m2, {})),
+            "by_dept": [{"dept": d, **diff(a.get(d, {}), b.get(d, {}))} for d in sorted(a.keys() | b.keys())],
+        }
 
     def anomalies(
         self,
@@ -211,22 +251,13 @@ class PayrollService:
         dept: str | None = None,
     ) -> list[dict[str, Any]]:
         month, threshold, limit = _month("month", month), _threshold(threshold), _limit(limit)
-
-        def compute(ver: _Version) -> list[dict[str, Any]]:
-            rows = kpi.kpi_anomalies(*ver.star(), month, threshold, limit, dept).collect()
-            return [
-                {
-                    "emp_id": r["emp_id"],
-                    "dept": r["dept"],
-                    "net": float(r["net"]) if r["net"] is not None else None,
-                    "median_net": float(r["median_net"]) if r["median_net"] is not None else None,
-                    "mad": float(r["mad"]) if r["mad"] is not None else None,
-                    "z": float(r["z"]) if r["z"] is not None else None,
-                }
-                for r in rows
-            ]
-
-        return self._answer(("anomalies", month, threshold, limit, dept), compute)
+        ranked = self._answers().ranked.get((month, dept), [])
+        # top-`limit` first, then the threshold, keeping null-z rows
+        return [
+            dict(zip(_SCORES, row))
+            for row in ranked[:limit]
+            if row[-1] is None or abs(row[-1]) >= threshold
+        ]
 
 
 def serve_http(service: PayrollService, host: str = "127.0.0.1", port: int = 0):

@@ -11,7 +11,10 @@ month-equality queries prune to a single partition directory instead of scanning
 
 Storage: each table is a TxTable (sources/txtable.py) and one TxCatalog pointer
 pins a version of each, so every load publishes with a single catalog commit and
-every catalog version is one consistent warehouse state. There is one warehouse
+every catalog version is one consistent warehouse state. Readers need no signal
+that a load is in flight: until the commit the head does not move. A load's
+row counts come from the parquet footers of the files it wrote
+(``TxTable.num_rows``), not from re-reading the tables. There is one warehouse
 class; ``TxPayrollWarehouse`` is an alias for it.
 """
 
@@ -35,9 +38,7 @@ class PayrollWarehouse:
     all three with ONE ``TxCatalog.commit`` — the reference's single
     load transaction, without Postgres. A reader sees the whole load
     or none of it, and a load that dies before the commit leaves the last
-    committed state. A load holds the catalog's staging mark
-    (``TxCatalog.staging``) from its first read to its commit, so readers on
-    any handle know the head is about to move.
+    committed state, with nothing to clean up before the next load.
 
     Within a load, ``read`` sees this load's own uncommitted table versions
     (read-your-writes, as inside the reference's transaction); otherwise it
@@ -98,19 +99,12 @@ class PayrollWarehouse:
         Returns row counts per table, mirroring the reference's print-based
         verification (/root/reference/scripts/load_once.py:73-74).
         """
-        with self.catalog.staging():
-            raw = csv_ingest.read_payroll_csv(self.spark, csv_path)
-            return self._transaction(csv_ingest.normalize(raw))
+        raw = csv_ingest.read_payroll_csv(self.spark, csv_path)
+        return self.load_frames(csv_ingest.normalize(raw))
 
     def load_frames(self, normalized: DataFrame) -> dict[str, int]:
         """Load one normalized batch in one transaction; returns row counts
         per table as of the new committed state."""
-        with self.catalog.staging():
-            return self._transaction(normalized)
-
-    def _transaction(self, normalized: DataFrame) -> dict[str, int]:
-        """Stage the three tables and publish them; the caller holds the
-        catalog's staging mark, so readers know the head is about to move."""
         try:
             counts = self._load_tables(normalized)
             # the single COMMIT: all three tables become visible atomically
@@ -189,11 +183,8 @@ class PayrollWarehouse:
             sort_within=["month", "emp_id"],
         )
 
-        counts = {
-            "dim_dept": self.read("dim_dept").count(),
-            "dim_employee": self.read("dim_employee").count(),
-            "fact_payroll": self.read("fact_payroll").count(),
-        }
+        # from the written files' parquet footers: no re-read, no Spark job
+        counts = {t: self.catalog.table(t).num_rows(v) for t, v in sorted(self._pending.items())}
         dim_dept.unpersist()
         return counts
 

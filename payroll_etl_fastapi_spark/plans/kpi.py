@@ -11,6 +11,10 @@ Reference SQL being re-expressed (semantics, not mechanism):
              SURVEY.md §2.8.1; A5 exact median, A6 MAD, P6-P9 robust z, O2 top-K
              BEFORE O3 threshold filter, NULL-z rows kept)
 
+`kpi_rows` is the one plan the service runs per committed warehouse version:
+every fact row with its department, from which api.PayrollService answers all
+four queries for every month (the four plans above stay their definition).
+
 Plan-shape notes (verified via .explain):
 - month equality filters hit the fact's month partitioning → partition pruning,
   the analog of the reference's fact_payroll(month) index.
@@ -77,6 +81,31 @@ def _joined(fact: DataFrame, dim_employee: DataFrame, dim_dept: DataFrame) -> Da
     """fact ⋈ dim_employee ⋈ dim_dept — both dims broadcast (J2+J3)."""
     return fact.join(F.broadcast(dim_employee), "emp_id", "inner").join(
         F.broadcast(dim_dept), "dept_id", "inner"
+    )
+
+
+def kpi_rows(fact: DataFrame, dim_employee: DataFrame, dim_dept: DataFrame) -> DataFrame:
+    """Every fact row with its department: fact ⟕ dim_employee ⟕ dim_dept,
+    both dims broadcast, projected to what the four queries read, with
+    `month` as `YYYY-MM`. `dept` is null where the inner join of the other
+    plans would drop the row, so the rows answer every query for every
+    month: `summary` and the company delta from all rows, the per-dept
+    queries from the rows with a dept (api.PayrollService collects this once
+    per committed version)."""
+    return (
+        fact.join(F.broadcast(dim_employee.select("emp_id", "dept_id")), "emp_id", "left")
+        .join(F.broadcast(dim_dept), "dept_id", "left")
+        .select(
+            F.date_format("month", "yyyy-MM").alias("month"),
+            "emp_id",
+            F.col("dept_name").alias("dept"),
+            "gross",
+            "bonus",
+            "overtime",
+            "taxes",
+            "net",
+            "fte",
+        )
     )
 
 

@@ -52,13 +52,12 @@ version, then one catalog-pointer swap makes all of them visible atomically.
 
 from __future__ import annotations
 
-import contextlib
 import json
 import os
 import re
 import shutil
 import uuid
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -74,7 +73,6 @@ __all__ = [
 ]
 
 _MANIFEST_RE = re.compile(r"^v(\d+)\.json$")
-_STAGING = "staging"  # TxCatalog's mark of a transaction in flight
 
 
 class ConcurrentCommit(RuntimeError):
@@ -317,6 +315,21 @@ class TxTable:
             names = os.listdir(os.path.join(self.root, d))
             found.update(n[len(prefix):] for n in names if n.startswith(prefix))
         return sorted(found)
+
+    def num_rows(self, version: int | None = None) -> int:
+        """Row count of ``version`` (default: latest), summed from the
+        parquet footers of the files a snapshot of it reads — no Spark job.
+        A dir without a committed file list (a legacy manifest, an empty
+        fence) is listed, as the snapshot reads the whole dir."""
+        import pyarrow.parquet as pq
+
+        snap = self._read_manifest(self.latest_version() if version is None else version)
+        fence = dict(snap.data_files) if snap.data_files is not None else {}
+        return sum(
+            pq.read_metadata(os.path.join(self.root, d, f)).num_rows
+            for d in snap.data_dirs
+            for f in fence.get(d) or self._list_parquet_files(d)
+        )
 
     # -- schema evolution --------------------------------------------------
 
@@ -1589,28 +1602,6 @@ class TxCatalog:
     def current(self) -> dict[str, int]:
         """table name → pinned table version ({} before the first commit)."""
         return self.head()[1]
-
-    @contextlib.contextmanager
-    def staging(self) -> Iterator[None]:
-        """Mark, for every handle on this root, that a transaction is staging
-        table versions the head does not pin yet; the mark is cleared when
-        the block ends, committed or not. There is one mark per root: when
-        writers overlap, the first to finish clears it. A writer that dies
-        inside the block leaves it until the next transaction on the root
-        ends."""
-        os.makedirs(self._cat, exist_ok=True)
-        mark = os.path.join(self._cat, _STAGING)
-        open(mark, "w").close()
-        try:
-            yield
-        finally:
-            with contextlib.suppress(FileNotFoundError):
-                os.remove(mark)
-
-    def is_staging(self) -> bool:
-        """True while some writer is inside ``staging()`` on this root: the
-        head is about to move."""
-        return os.path.exists(os.path.join(self._cat, _STAGING))
 
     def commit(self, table_versions: dict[str, int], epoch_key: str | None = None) -> int:
         """Atomically publish a new catalog state (full map, not a delta).

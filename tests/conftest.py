@@ -1,6 +1,8 @@
 from __future__ import annotations
 
+import importlib.util
 import os
+import sys
 
 import pytest
 
@@ -25,6 +27,25 @@ def reference_csv() -> str:
     if not os.path.exists(REFERENCE_CSV):
         pytest.skip("reference dataset not available")
     return REFERENCE_CSV
+
+
+@pytest.fixture(scope="session")
+def perfbench_module():
+    """Loader of a module of the payroll benchmark (``perfbench/<name>.py``,
+    not a package): ``perfbench_module("gen")`` is its seeded payroll CSV
+    generator."""
+
+    def load(name: str):
+        key = f"perfbench_{name}"
+        if key not in sys.modules:
+            path = os.path.join(os.path.dirname(__file__), os.pardir, "perfbench", f"{name}.py")
+            spec = importlib.util.spec_from_file_location(key, path)
+            module = importlib.util.module_from_spec(spec)
+            sys.modules[key] = module  # dataclasses resolve annotations through it
+            spec.loader.exec_module(module)
+        return sys.modules[key]
+
+    return load
 
 
 @pytest.fixture(scope="session")

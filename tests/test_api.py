@@ -3,13 +3,16 @@ BASELINE.md plus the 404 and shape semantics of /root/reference/src/api.py."""
 
 from __future__ import annotations
 
+import math
 import sys
 import threading
+import time
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 
 from payroll_etl_fastapi_spark import api
-from payroll_etl_fastapi_spark.api import InvalidParam, NotFound, PayrollService
+from payroll_etl_fastapi_spark.api import NotFound, PayrollService
 from payroll_etl_fastapi_spark.etl import PayrollWarehouse
 from payroll_etl_fastapi_spark.plans import kpi
 from payroll_etl_fastapi_spark.sources import csv_ingest
@@ -190,8 +193,8 @@ def test_stdlib_http_server_round_trip(service):
         t.join(timeout=5)
 
 
-# -- on small generated batches: one committed version per request, the
-# per-version answer memo, and the HTTP edge's 422 / 500 answers -------------
+# -- on small generated batches: one committed version per request, one
+# derivation per version, and the HTTP edge's 422 / 500 answers -------------
 
 
 def _batch(spark, rows):
@@ -255,11 +258,11 @@ def test_request_reads_one_committed_version(spark, small_wh, monkeypatch):
 
 
 def test_memo_is_fresh_after_commit(spark, small_wh):
-    """Memoized answers and 404s belong to the version they were computed
-    at: the next request after a commit sees the new state."""
+    """Answers and 404s belong to the version they were derived at: the
+    next request after a commit sees the new state."""
     svc = PayrollService(small_wh)
     assert _gross(svc.by_dept("2025-01")) == JAN_BY_DEPT[0]
-    for _ in range(2):  # computed, then served from the memo
+    for _ in range(2):  # derived, then looked up
         with pytest.raises(NotFound):
             svc.summary("2025-02")
     small_wh.load_frames(_batch(spark, BATCH_1))
@@ -267,60 +270,229 @@ def test_memo_is_fresh_after_commit(spark, small_wh):
     assert svc.summary("2025-02")["gross"] == 210.0
 
 
-def test_memo_is_bypassed_while_a_load_is_staging(spark, small_wh, monkeypatch):
-    """Between a load's first write and its commit, requests answer at the
-    head but neither read nor fill the memo; once the load ends, with or
-    without a commit, repeats are memoized again."""
+# -- the service against the plans it stands for ------------------------------
+
+LIMITS = (1, 10, api.LIMIT_MAX)
+THRESHOLDS = (0.0, 2.5, 1e9)
+MISSING = "1999-01"
+UNKNOWN_DEPT = "No Such Dept"
+
+
+def _prev(month: str) -> str:
+    y, m = int(month[:4]), int(month[5:7])
+    return f"{y - 1:04d}-12" if m == 1 else f"{y:04d}-{m - 1:02d}"
+
+
+def _call(svc: PayrollService, key: tuple) -> tuple[int, object]:
+    kind, *args = key
+    try:
+        if kind == "anomalies":
+            month, threshold, limit, dept = args
+            return 200, svc.anomalies(month, threshold=threshold, limit=limit, dept=dept)
+        return 200, getattr(svc, kind)(*args)
+    except NotFound:
+        return 404, None
+
+
+def _plan(frames, key: tuple) -> tuple[int, object]:
+    """The answer of ``key`` from its plans/kpi.py plan, shaped as the
+    service shapes it."""
+    fact, emp, dept = frames
+    kind, *args = key
+    if kind == "summary":
+        row = kpi.kpi_summary(fact, *args).first()
+        return (404, None) if row["gross"] is None else (200, row.asDict())
+    if kind == "by_dept":
+        rows = [r.asDict() for r in kpi.kpi_by_dept(fact, emp, dept, *args).collect()]
+        return (200, rows) if rows else (404, None)
+    if kind == "delta":
+        company, by_dept = kpi.kpi_delta(fact, emp, dept, *args)
+        return 200, {
+            "company": {k: v or 0.0 for k, v in company.first().asDict().items()},
+            "by_dept": [r.asDict() for r in by_dept.collect()],
+        }
+    month, threshold, limit, d = args
+    return 200, [r.asDict() for r in kpi.kpi_anomalies(fact, emp, dept, month, threshold, limit, d).collect()]
+
+
+def _same(got, want) -> bool:
+    """Equal, numbers within the benchmark oracle's rel 1e-9 / abs 1e-6."""
+    if isinstance(want, dict):
+        return isinstance(got, dict) and got.keys() == want.keys() and all(_same(got[k], want[k]) for k in want)
+    if isinstance(want, (list, tuple)):
+        return type(got) is type(want) and len(got) == len(want) and all(map(_same, got, want))
+    if isinstance(want, float):
+        return isinstance(got, float) and math.isclose(got, want, rel_tol=1e-9, abs_tol=1e-6)
+    return type(got) is type(want) and got == want
+
+
+def _assert_service_equals_plans(svc, wh, months, depts, every_dept_months) -> list:
+    """Every endpoint at every month in ``months`` (plus a missing month)
+    against its plan at the warehouse's head; anomalies for every limit and
+    threshold, for all depts at every month and per dept (each of
+    ``depts`` and an unknown one) at ``every_dept_months``. Returns the
+    anomaly answers."""
+    frames = tuple(wh.read(t) for t in ("fact_payroll", "dim_employee", "dim_dept"))
+    keys, ranked = [], []
+    for m in [*months, MISSING]:
+        keys += [("summary", m), ("by_dept", m), ("delta", _prev(m), m)]
+        for d in [None, *depts, UNKNOWN_DEPT] if m in every_dept_months else [None]:
+            ranked.append(("anomalies", m, 0.0, api.LIMIT_MAX, d))
+    # the plans run concurrently: each is a few small Spark jobs
+    with ThreadPoolExecutor(4) as pool:
+        want = dict(zip(keys + ranked, pool.map(lambda k: _plan(frames, k), keys + ranked)))
+    answers = []
+    for key in keys:
+        assert _same(_call(svc, key), want[key]), key
+    for key in ranked:
+        _, m, _, _, d = key
+        full = want[key][1]
+        assert len(full) < api.LIMIT_MAX  # the full ranking: every cut below is exact
+        for limit in LIMITS:
+            for threshold in THRESHOLDS:
+                # the plan ranks, cuts at `limit`, then filters on the
+                # threshold, keeping null-z rows (the oracle's rule too)
+                expect = [r for r in full[:limit] if r["z"] is None or abs(r["z"]) >= threshold]
+                status, got = _call(svc, ("anomalies", m, threshold, limit, d))
+                assert status == 200 and _same(got, expect), (m, threshold, limit, d)
+                answers += got
+    return answers
+
+
+def test_service_equals_plans_at_every_small_state(spark, small_wh):
+    """BATCH_0-2: transfers restate every month and Gamma is a new dept.
+    Single-employee dept-months have MAD = 0, so their rows score a null z
+    and are kept at every threshold."""
     svc = PayrollService(small_wh)
-    plans = []
-    plan = kpi.kpi_summary
-    monkeypatch.setattr(kpi, "kpi_summary", lambda *a: plans.append(a[1]) or plan(*a))
-    assert svc.summary("2025-01")["gross"] == 600.0  # memoized at version 1
-    inside = []
-    write = TxTable.overwrite
+    months = ["2025-01"]
+    answers = _assert_service_equals_plans(svc, small_wh, months, ["Alpha", "Beta"], months)
+    for batch, depts in ((BATCH_1, ["Alpha", "Beta"]), (BATCH_2, ["Alpha", "Beta", "Gamma"])):
+        small_wh.load_frames(_batch(spark, batch))
+        months.append(batch[0][2])
+        answers += _assert_service_equals_plans(svc, small_wh, months, depts, months)
+    assert any(r["mad"] == 0.0 and r["z"] is None for r in answers)
+    # the plans' own limit and threshold, not the rule above, at the newest state
+    frames = tuple(small_wh.read(t) for t in ("fact_payroll", "dim_employee", "dim_dept"))
+    for limit in LIMITS:
+        for threshold in THRESHOLDS:
+            key = ("anomalies", "2025-01", threshold, limit, None)
+            assert _same(_call(svc, key), _plan(frames, key)), key
 
-    def ask_then_write(self, df, partition_by=None):
-        if not inside:  # at the load's first table write
-            inside.append(small_wh.catalog.is_staging())
-            inside.extend(svc.summary("2025-01")["gross"] for _ in range(2))
-        return write(self, df, partition_by=partition_by)
 
-    monkeypatch.setattr(TxTable, "overwrite", ask_then_write)
+def test_service_equals_plans_on_generated_batches(spark, tmp_path, perfbench_module):
+    """A generated base CSV with one (emp_id, month) repeated, so headcount
+    must count distinct employees; then a restating batch (transfers, a new
+    dept, corrected facts)."""
+    gen = perfbench_module("gen")
+    inputs = gen.generate(str(tmp_path / "in"), 3, 24, 12, 1)
+    with open(inputs.base_csv) as fh:
+        first = fh.readlines()[1].split(",")
+    first[10] = "9999.00"  # the same employee and month again, another net
+    with open(inputs.base_csv, "a") as fh:
+        fh.write(",".join(first))
+    wh = PayrollWarehouse(spark, str(tmp_path / "wh"))
+    svc = PayrollService(wh)
+    for state, csv in enumerate([inputs.base_csv, *inputs.batch_csvs]):
+        wh.load_csv(csv)
+        months = inputs.months + inputs.batch_months[:state]
+        depts = [r["dept_name"] for r in wh.read("dim_dept").orderBy("dept_name").collect()]
+        _assert_service_equals_plans(svc, wh, months, depts, {first[4][:7], months[-1]})
+    repeated = first[4][:7]
+    rows = wh.read("fact_payroll").filter(f"month = '{repeated}-01'").count()
+    assert svc.summary(repeated)["headcount"] == rows - 1
+
+
+# -- one derivation per version ----------------------------------------------
+
+
+def test_first_touches_of_a_version_share_one_derivation(spark, small_wh, monkeypatch):
+    """Six requests reaching a new version at once run its plan once; the
+    next version runs it once more."""
+    svc = PayrollService(small_wh)
+    calls = []
+    rows = kpi.kpi_rows
+
+    def counted(*a):
+        calls.append(a)
+        time.sleep(0.2)  # keep the derivation in flight while the others arrive
+        return rows(*a)
+
+    monkeypatch.setattr(kpi, "kpi_rows", counted)
+
+    def touch_together(month: str) -> list[float]:
+        barrier = threading.Barrier(6)
+
+        def touch() -> float:
+            barrier.wait(timeout=30)
+            return svc.summary(month)["gross"]
+
+        with ThreadPoolExecutor(6) as pool:
+            return list(pool.map(lambda _: touch(), range(6)))
+
+    assert touch_together("2025-01") == [600.0] * 6
+    assert len(calls) == 1
     small_wh.load_frames(_batch(spark, BATCH_1))
-    assert inside == [True, 600.0, 600.0]
-    assert plans == ["2025-01"] * 3 and len(svc._memo) == 1
-    assert not small_wh.catalog.is_staging()
-    for _ in range(2):  # the new version: computed, then memoized
-        assert svc.summary("2025-01")["gross"] == 600.0
-    assert len(plans) == 4
-
-    def failed_commit(_versions):
-        raise RuntimeError("commit failed")
-
-    monkeypatch.setattr(small_wh.catalog, "commit", failed_commit)
-    with pytest.raises(RuntimeError, match="commit failed"):
-        small_wh.load_frames(_batch(spark, BATCH_2))
-    assert not small_wh.catalog.is_staging()
-
-
-def test_memo_serves_repeats_without_spark_and_stays_bounded(small_wh, monkeypatch):
-    svc = PayrollService(small_wh)
-    first = svc.summary("2025-01")
-    first["gross"] = -1.0  # a caller's edit does not reach the memo
-
-    def no_plan(*_a, **_kw):
-        raise AssertionError("a repeated request re-planned")
-
-    monkeypatch.setattr(kpi, "kpi_summary", no_plan)
+    assert touch_together("2025-02") == [210.0] * 6
+    assert len(calls) == 2
+    # each caller gets its own answer: editing one does not reach the next
+    svc.summary("2025-01")["gross"] = -1.0
+    svc.by_dept("2025-01")[0]["gross"] = -1.0
     assert svc.summary("2025-01")["gross"] == 600.0
-    monkeypatch.undo()
-    monkeypatch.setattr(api, "MEMO_SIZE", 2)
-    for m in ("2025-02", "2025-03", "2025-04"):
-        with pytest.raises(NotFound):
-            svc.summary(m)
-    assert len(svc._memo) == 2
-    with pytest.raises(InvalidParam):
-        svc.anomalies("2025-01", limit=api.LIMIT_MAX + 1)
+    assert _gross(svc.by_dept("2025-01")) == JAN_BY_DEPT[1]
+    assert len(calls) == 2
+
+
+def test_failed_derivation_answers_500_to_every_waiter_then_retries(small_wh, monkeypatch):
+    """A derivation that raises answers every request waiting on it with a
+    500 and a JSON body; it is not kept, so the next request succeeds."""
+    import json
+    import urllib.error
+    import urllib.request
+
+    svc = PayrollService(small_wh)
+    entered = []
+    summary = svc.summary
+
+    def counted_summary(month):
+        entered.append(month)
+        return summary(month)
+
+    svc.summary = counted_summary
+    calls = []
+
+    def failing(*_a):
+        calls.append(1)
+        deadline = time.monotonic() + 30
+        while len(entered) < 6 and time.monotonic() < deadline:
+            time.sleep(0.01)
+        time.sleep(0.3)  # the others are past the head read, waiting on this one
+        raise RuntimeError("derivation fault")
+
+    srv = api.serve_http(svc)
+    t = threading.Thread(target=srv.serve_forever, daemon=True)
+    t.start()
+
+    def status(path):
+        try:
+            with urllib.request.urlopen(f"http://127.0.0.1:{srv.server_address[1]}{path}", timeout=60) as r:
+                return r.status, json.loads(r.read())
+        except urllib.error.HTTPError as e:
+            return e.code, json.loads(e.read())
+
+    try:
+        monkeypatch.setattr(kpi, "kpi_rows", failing)
+        with ThreadPoolExecutor(6) as pool:
+            answers = list(pool.map(lambda _: status("/kpi/summary?month=2025-01"), range(6)))
+        assert answers == [(500, {"detail": "Internal Server Error"})] * 6
+        assert len(calls) == 1
+        monkeypatch.undo()
+        code, body = status("/kpi/summary?month=2025-01")
+        assert code == 200 and body["gross"] == 600.0
+    finally:
+        srv.shutdown()
+        srv.server_close()
+        t.join(timeout=5)
+    assert not t.is_alive()
 
 
 def test_concurrent_reads_while_loads_commit(spark, small_wh):
@@ -358,7 +530,7 @@ def test_concurrent_reads_while_loads_commit(spark, small_wh):
     assert _gross(svc.by_dept("2025-01")) == JAN_BY_DEPT[2]
 
 
-def test_http_edge_answers_bad_input_and_faults(small_wh, monkeypatch):
+def test_http_edge_answers_bad_input_and_faults(spark, small_wh, monkeypatch):
     """Out-of-domain params get a 422 and an engine fault a 500, each with a
     JSON detail — never a dropped connection."""
     import json
@@ -392,7 +564,9 @@ def test_http_edge_answers_bad_input_and_faults(small_wh, monkeypatch):
             code, body = status(bad)
             assert code == 422 and "detail" in body, bad
         assert status("/kpi/summary?month=2025-01")[0] == 200
-        monkeypatch.setattr(kpi, "kpi_by_dept", broken)
+        # a fault while deriving the next version's answers
+        small_wh.load_frames(_batch(spark, BATCH_1))
+        monkeypatch.setattr(kpi, "kpi_rows", broken)
         assert status("/kpi/by-dept?month=2025-01") == (500, {"detail": "Internal Server Error"})
     finally:
         srv.shutdown()

@@ -1093,6 +1093,9 @@ def test_post_commit_file_is_excluded_from_snapshot_and_changes(spark, table):
     # the committed snapshot at every version excludes the stray rows
     assert _ids(table.snapshot()) == list(range(15))
     assert _ids(table.snapshot(2)) == list(range(15))
+    # footer row counts read the same fenced files as the snapshot
+    assert table.num_rows() == table.num_rows(2) == 15
+    assert table.num_rows(1) == 10
     # the change feed replays only committed rows
     ch = table.changes(1, 2, keys=["id"]).collect()
     assert sorted(r.id for r in ch) == list(range(10, 15))
@@ -1117,6 +1120,7 @@ def test_post_commit_file_excluded_in_partitioned_dirs(spark, tmp_path):
     shutil.move(part, os.path.join(pdir, "part-99999-stray.parquet"))
     got = t.snapshot().collect()
     assert sorted(r.id for r in got) == list(range(8))
+    assert t.num_rows() == 8
     # the hive partition column still resolves on the file-fenced read
     assert {r.part for r in got} == {0, 1}
 
@@ -1141,6 +1145,7 @@ def test_pre_r8_manifest_reads_whole_dir_legacy(spark, table):
     json.dump(doc, open(mpath, "w"))
     _inject_post_commit_file(spark, table, 1, [500, 501])
     assert _ids(table.snapshot()) == list(range(10)) + [500, 501]
+    assert table.num_rows() == 12  # no fence: the dir is listed, as it is read
 
 
 def test_clone_carries_the_source_fence(spark, table, tmp_path):
